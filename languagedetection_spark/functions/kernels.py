@@ -134,6 +134,11 @@ def _good_char_table() -> dict:
     return _GOOD_TABLE_CACHE
 
 
+# every drop_reason FilterModel.decide emits, in cascade order
+DROP_REASONS = ("too_short", "symbol_ratio", "repetition", "no_lang",
+                "low_lang_conf", "high_ppl")
+
+
 class FilterModel:
     """Frozen, picklable quality-filter model (vocab + trigram tables)."""
 

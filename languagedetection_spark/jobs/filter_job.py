@@ -37,6 +37,19 @@ def build_model(spark, corpus_path: str | None):
     return FilterModel.from_corpus(rows)
 
 
+def write_conv_report(decided, path: str) -> int:
+    """Write the conversation-level rollup of ``decided`` to ``path``; its
+    row count is observed on that write, not re-read."""
+    from pyspark.sql import Observation, functions as F
+
+    from ..operators.quality_filter import conv_report
+
+    obs = Observation()
+    (conv_report(decided).observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.parquet(path, mode="overwrite"))
+    return obs.get["n"]
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True)
@@ -171,15 +184,8 @@ def main(argv: list[str] | None = None) -> int:
         out = {"run_id": args.run_id, "mode": "streaming",
                "model_fingerprint": fp}
         if args.conv_report:
-            from ..operators.quality_filter import conv_report
-
-            decided = spark.read.parquet(args.output)
-            conv_report(decided).write.parquet(
-                args.conv_report, mode="overwrite"
-            )
-            out["conv_report_rows"] = (
-                spark.read.parquet(args.conv_report).count()
-            )
+            out["conv_report_rows"] = write_conv_report(
+                spark.read.parquet(args.output), args.conv_report)
         print(json.dumps(out))
         spark.stop()
         return 0
@@ -208,45 +214,30 @@ def main(argv: list[str] | None = None) -> int:
         n_buckets=args.buckets,
         extra_lineage={"model_fingerprint": fp, "input_path": args.input},
     )
-    # THIS run's bucket dirs only (0..buckets-1), not a bare bucket=* glob:
-    # a previous run on the same --output with a LARGER --buckets count
-    # leaves stale bucket dirs beyond this run's range, and globbing them
-    # in would duplicate every turn they hold (each turn is also in this
-    # run's rewritten buckets).  Completed == all of this run's dirs exist.
-    this_run_dirs = [
-        d for b in range(args.buckets)
-        if os.path.isdir(d := os.path.join(args.output, f"bucket={b}"))
-    ]
-    n_convs = None
-    if args.conv_report:
-        from ..operators.quality_filter import conv_report
-
-        if this_run_dirs:
-            decided = spark.read.parquet(*this_run_dirs)
-            report = conv_report(decided)
-            report.write.parquet(args.conv_report, mode="overwrite")
-            n_convs = spark.read.parquet(args.conv_report).count()
-        else:
-            print(f"conv-report skipped: no completed buckets under "
-                  f"{args.output}", file=sys.stderr)
+    # THIS run's bucket dirs only, not a bare bucket=* glob: a previous run
+    # with a LARGER --buckets leaves stale dirs beyond this range that would
+    # duplicate turns.  Each must exist, or an export would silently drop
+    # the turns of a missing one.
+    dirs = [os.path.join(args.output, f"bucket={b}")
+            for b in range(args.buckets)]
+    missing = [d for d in dirs if not os.path.isdir(d)]
+    if missing:
+        raise RuntimeError(f"bucket dirs of run {args.run_id!r} are missing: "
+                           f"{missing}; rerun under a new --run-id")
     out = {"run_id": args.run_id, "processed_buckets": processed,
            "model_fingerprint": fp}
-    if n_convs is not None:
-        out["conv_report_rows"] = n_convs
+    if args.conv_report:
+        out["conv_report_rows"] = write_conv_report(
+            spark.read.parquet(*dirs), args.conv_report)
     if args.bucketed_table:
         from ..operators.quality_filter import kept_turns
         from ..sources.sinks import write_bucketed
 
-        if this_run_dirs:
-            decided = spark.read.parquet(*this_run_dirs)
-            write_bucketed(
-                kept_turns(decided), args.bucketed_table,
-                n_buckets=args.buckets,
-            )
-            out["bucketed_table"] = args.bucketed_table
-        else:
-            print(f"bucketed-table skipped: no completed buckets under "
-                  f"{args.output}", file=sys.stderr)
+        write_bucketed(
+            kept_turns(spark.read.parquet(*dirs)), args.bucketed_table,
+            n_buckets=args.buckets,
+        )
+        out["bucketed_table"] = args.bucketed_table
     print(json.dumps(out))
     spark.stop()
     return 0

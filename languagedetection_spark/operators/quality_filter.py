@@ -1,6 +1,6 @@
 """The production quality-filter pipeline (EP-3 generalized, SURVEY §3/§7).
 
-transcripts --(salted repartition + stable order)--> mapInPandas(decide) -->
+transcripts --> mapInPandas(decide) -->
 per-turn (lang, lang_conf, ppl, keep, drop_reason, scrubbed_text).
 
 The scoring stage is map-only: at 10^12 turns the job is embarrassingly
@@ -15,27 +15,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.kernels import FilterModel
 from ..functions.udfs import with_decisions
-from ..plans.partitioning import stable_order_within_partitions
 
 
-def quality_filter(
-    df: DataFrame,
-    model: FilterModel | Broadcast,
-    *,
-    num_partitions: int | None = None,
-    ordered: bool = False,
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply the full per-turn decision pipeline.
-
-    ``ordered=True`` adds the stable (conv_id, turn_idx) per-partition
-    ordering the north_rule mandates for order-sensitive consumers; the
-    decisions themselves are row-local, so default is the shuffle-free path.
-    """
-    if ordered:
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        df = stable_order_within_partitions(df, n)
-    return with_decisions(df, model, text_col=text_col)
+def quality_filter(df: DataFrame, model: FilterModel | Broadcast) -> DataFrame:
+    """Apply the full per-turn decision pipeline."""
+    return with_decisions(df, model)
 
 
 def kept_turns(decided: DataFrame) -> DataFrame:

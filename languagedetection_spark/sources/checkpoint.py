@@ -6,26 +6,32 @@ independently, and records one row per completed bucket in a ``_progress``
 JSON-lines table (one atomically-renamed file per bucket):
 
     run_id, bucket, status, n_rows, n_kept, mean_lang_conf, n_no_lang,
-    drop_reasons, model_fingerprint, input_path, finished_at
+    drop_reasons, output, n_buckets, model_fingerprint, input_path,
+    finished_at
 
 (the detector-confidence fields appear when the processed output carries
 the quality-filter columns; a generic ``process`` gets counts only)
 
-A re-run with the same checkpoint dir skips completed buckets (idempotent
-resume after failure); each bucket's output is written to its own
-subdirectory, so a partially-written bucket is simply overwritten on retry
-(overwrite-by-partition idempotency).  The model fingerprint ties every
-bucket's output to the exact broadcast artifact that produced it (lineage).
+A bucket costs one pass: its metrics are observed on the write that stores
+it.  A re-run with the same checkpoint dir and run_id skips the buckets
+``_progress`` marks done (idempotent resume after failure), but first checks
+that they were recorded under the same ``n_buckets`` and ``extra_lineage``
+(the job's model fingerprint and input path), and raises otherwise.  Each
+bucket's output is written to its own subdirectory, so a partially-written
+bucket is simply overwritten on retry (overwrite-by-partition idempotency).
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from ..functions.kernels import DROP_REASONS
 
 
 def model_fingerprint(model) -> str:
@@ -42,21 +48,25 @@ def _progress_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "_progress")
 
 
-def load_completed(spark: SparkSession, checkpoint_dir: str,
-                   run_id: str) -> set[int]:
-    path = _progress_path(checkpoint_dir)
-    if not os.path.exists(path):
-        return set()
-    try:
-        df = spark.read.json(path)
-        return {
-            r["bucket"]
-            for r in df.filter(
-                (F.col("run_id") == run_id) & (F.col("status") == "done")
-            ).select("bucket").collect()
-        }
-    except Exception:
-        return set()
+def load_completed(checkpoint_dir: str, run_id: str) -> dict[int, dict]:
+    """The completed buckets of ``run_id``, each with its ``_progress`` row.
+    Only the ``*.json`` files ``record_done`` renamed into place are read (a
+    ``.tmp`` left by a crash before the rename is ignored); an unreadable
+    row raises, naming its file."""
+    pattern = os.path.join(_progress_path(checkpoint_dir),
+                           glob.escape(run_id) + "-*.json")
+    done = {}
+    for path in sorted(glob.glob(pattern)):
+        with open(path) as f:
+            for line in f:
+                try:
+                    row = json.loads(line)
+                except json.JSONDecodeError as e:
+                    raise ValueError(
+                        f"unreadable _progress row in {path}: {e}") from e
+                if row.get("run_id") == run_id and row.get("status") == "done":
+                    done[row["bucket"]] = row
+    return done
 
 
 def record_done(checkpoint_dir: str, run_id: str, bucket: int,
@@ -73,16 +83,14 @@ def record_done(checkpoint_dir: str, run_id: str, bucket: int,
     os.replace(tmp, final)
 
 
-def _bucket_metrics(spark: SparkSession, dest: str) -> dict:
-    """One aggregate pass over a just-written bucket: row/keep counts plus
+def _observe(out: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the bucket's metrics to its write pass: row/keep counts plus
     the detector-confidence metrics the north_rule asks for (mean winner
     confidence, abstention count, drop-reason histogram).  Columns are
     optional — a non-filter ``process`` (e.g. the resume unit test's
     length flag) still gets n_rows/n_kept; the real quality_filter output
-    gets the full set.  The drop-reason histogram is bounded by the
-    reason enum, so the extra groupBy collects O(|reasons|) rows."""
-    written = spark.read.parquet(dest)
-    cols = set(written.columns)
+    gets the full set."""
+    cols = set(out.columns)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if "keep" in cols:
         aggs.append(
@@ -97,18 +105,21 @@ def _bucket_metrics(spark: SparkSession, dest: str) -> dict:
             F.coalesce(F.sum(F.col("lang").isNull().cast("long")), F.lit(0))
             .alias("n_no_lang")
         )
-    stats = written.agg(*aggs).collect()[0].asDict()
-    metrics = {"n_rows": stats["n_rows"], "n_kept": stats.get("n_kept")}
-    if "lang_conf" in cols:
-        metrics["mean_lang_conf"] = stats["mean_lang_conf"]
-    if "lang" in cols:
-        metrics["n_no_lang"] = stats["n_no_lang"]
     if "drop_reason" in cols:
+        aggs.append(F.struct(*[
+            F.count_if(F.col("drop_reason") == r).alias(r)
+            for r in DROP_REASONS
+        ]).alias("drop_reasons"))
+    obs = Observation()
+    return out.observe(obs, *aggs), obs
+
+
+def _bucket_metrics(obs: Observation) -> dict:
+    """The ``_progress`` metrics of a bucket whose write has returned."""
+    metrics = {"n_kept": None, **obs.get}
+    if "drop_reasons" in metrics:
         metrics["drop_reasons"] = {
-            r["drop_reason"]: r["n"]
-            for r in written.filter("drop_reason IS NOT NULL")
-            .groupBy("drop_reason").agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+            r: n for r, n in metrics["drop_reasons"].asDict().items() if n
         }
     return metrics
 
@@ -129,7 +140,15 @@ def run_with_checkpoint(
 
     Buckets are ``crc32(key) % n_buckets`` so membership is stable across
     runs and engines.  Each bucket filter is pushed into the scan."""
-    done = load_completed(spark, checkpoint_dir, run_id)
+    identity = {"n_buckets": n_buckets, **(extra_lineage or {})}
+    done = load_completed(checkpoint_dir, run_id)
+    for b, row in sorted(done.items()):
+        for field, value in identity.items():
+            if row.get(field) != value:
+                raise ValueError(
+                    f"cannot resume run_id {run_id!r}: bucket {b} was "
+                    f"recorded with {field}={row.get(field)!r}, this run "
+                    f"has {field}={value!r}; use a new run_id")
     bucketed = df.withColumn(
         "_bucket", F.crc32(F.col(key).cast("string")) % n_buckets
     )
@@ -138,13 +157,12 @@ def run_with_checkpoint(
         if b in done:
             continue
         part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        out = process(part)
+        out, obs = _observe(process(part))
         dest = os.path.join(output_dir, f"bucket={b}")
         out.write.mode("overwrite").parquet(dest)
         record_done(
             checkpoint_dir, run_id, b,
-            {**_bucket_metrics(spark, dest), "output": dest,
-             **(extra_lineage or {})},
+            {**_bucket_metrics(obs), "output": dest, **identity},
         )
         processed.append(b)
     return processed

@@ -6,6 +6,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 # ---------------------------------------------------------------------------
 # op-1: regex CSV scan
@@ -34,6 +36,33 @@ def test_read_regex_csv(spark, tmp_path):
     assert any("\n" in t for t, _ in rows)
 
 
+def _length_flag(part):
+    return part.withColumn("keep", F.length("text") > 5)
+
+
+def _failing_after(n):
+    calls = {"n": 0}
+
+    def process(part):
+        calls["n"] += 1
+        if calls["n"] > n:
+            raise RuntimeError("boom")
+        return _length_flag(part)
+
+    return process
+
+
+def _tree(*roots):
+    """Every file under ``roots`` with its size and mtime."""
+    files = {}
+    for root in roots:
+        for d, _, names in os.walk(root):
+            for name in names:
+                st = os.stat(os.path.join(d, name))
+                files[os.path.join(d, name)] = (st.st_size, st.st_mtime_ns)
+    return files
+
+
 def test_checkpoint_resume(spark, fixture_dir, tmp_path):
     from languagedetection_spark.sources.checkpoint import (
         load_completed, run_with_checkpoint,
@@ -41,21 +70,12 @@ def test_checkpoint_resume(spark, fixture_dir, tmp_path):
 
     df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
     out1, ck = str(tmp_path / "out1"), str(tmp_path / "ck")
-
-    def proc(part):
-        return part.withColumn("keep", F.length("text") > 5)
-
-    calls = {"n": 0}
-
-    def failing(part):
-        calls["n"] += 1
-        if calls["n"] > 2:
-            raise RuntimeError("boom")
-        return proc(part)
+    proc = _length_flag
 
     with pytest.raises(RuntimeError):
-        run_with_checkpoint(spark, df, failing, out1, ck, "t1", n_buckets=4)
-    assert load_completed(spark, ck, "t1") == {0, 1}
+        run_with_checkpoint(spark, df, _failing_after(2), out1, ck, "t1",
+                            n_buckets=4)
+    assert set(load_completed(ck, "t1")) == {0, 1}
 
     done = run_with_checkpoint(spark, df, proc, out1, ck, "t1", n_buckets=4)
     assert done == [2, 3]
@@ -69,6 +89,130 @@ def test_checkpoint_resume(spark, fixture_dir, tmp_path):
     a = sorted(map(tuple, spark.read.parquet(out1 + "/bucket=*").collect()))
     b = sorted(map(tuple, spark.read.parquet(out2 + "/bucket=*").collect()))
     assert a == b and len(a) == df.count()
+
+
+def test_checkpoint_one_write_pass_per_bucket(spark, fixture_dir,
+                                              oracle_model, tmp_path):
+    """A bucket's _progress metrics come from the pass that writes it: a
+    bucket launches no more Spark jobs than a bare write of the same
+    bucket, reading _progress launches none, and every row reconciles
+    with the rows its bucket dir holds."""
+    from languagedetection_spark.functions.kernels import FilterModel
+    from languagedetection_spark.functions.udfs import broadcast_model
+    from languagedetection_spark.operators.quality_filter import quality_filter
+    from languagedetection_spark.sources.checkpoint import (
+        load_completed, run_with_checkpoint,
+    )
+
+    v, tm, _ = oracle_model
+    bc = broadcast_model(spark, FilterModel.from_vocabulary(v, tm))
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck, n = str(tmp_path / "out"), str(tmp_path / "ck"), 3
+    sc = spark.sparkContext
+    started = []
+
+    def process(part):
+        sc.setJobGroup(f"ckpt-bucket-{len(started)}", "checkpointed bucket")
+        started.append(len(started))
+        return quality_filter(part, bc)
+
+    try:
+        sc.setJobGroup("ckpt-before-buckets", "resume bookkeeping")
+        run_with_checkpoint(spark, df, process, out, ck, "j1", n_buckets=n)
+        sc.setJobGroup("ckpt-load", "reading _progress")
+        done = load_completed(ck, "j1")
+        for b in range(n):
+            sc.setJobGroup(f"bare-bucket-{b}", "bare write of the bucket")
+            part = df.filter(F.crc32(F.col("conv_id").cast("string")) % n == b)
+            quality_filter(part, bc).write.parquet(str(tmp_path / f"bare{b}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = lambda g: len(sc.statusTracker().getJobIdsForGroup(g))  # noqa: E731
+
+    assert started == list(range(n)) and sorted(done) == list(range(n))
+    assert jobs("ckpt-before-buckets") == 0 and jobs("ckpt-load") == 0
+    for b in range(n):
+        assert 0 < jobs(f"ckpt-bucket-{b}") <= jobs(f"bare-bucket-{b}"), b
+        written = spark.read.parquet(os.path.join(out, f"bucket={b}"))
+        row = done[b]
+        assert row["n_rows"] == written.count()
+        assert row["n_kept"] == written.filter("keep").count()
+        assert (row["n_kept"] + sum(row["drop_reasons"].values())
+                == row["n_rows"])
+        assert row["n_buckets"] == n
+
+
+def test_resume_refuses_a_changed_bucket_count(spark, fixture_dir, tmp_path):
+    """The resume data-loss sequence: 8 buckets stopped after 4, then resumed
+    with 4 buckets under the same run_id, used to skip buckets 0..3 of the
+    OTHER bucketing and report success over about half the turns.  It must
+    raise, naming the field, before any bucket dir changes."""
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    with pytest.raises(RuntimeError):
+        run_with_checkpoint(spark, df, _failing_after(4), out, ck, "d4",
+                            n_buckets=8)
+    before = _tree(out, ck)
+    assert len([d for d in os.listdir(out) if d.startswith("bucket=")]) == 4
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_with_checkpoint(spark, df, _length_flag, out, ck, "d4",
+                            n_buckets=4)
+    assert _tree(out, ck) == before
+
+
+def test_resume_refuses_a_changed_model(spark, fixture_dir, tmp_path):
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    lineage = {"model_fingerprint": "aaaa", "input_path": "in.parquet"}
+    with pytest.raises(RuntimeError):
+        run_with_checkpoint(spark, df, _failing_after(2), out, ck, "fp",
+                            n_buckets=4, extra_lineage=lineage)
+    before = _tree(out, ck)
+    with pytest.raises(ValueError, match="model_fingerprint"):
+        run_with_checkpoint(spark, df, _length_flag, out, ck, "fp",
+                            n_buckets=4,
+                            extra_lineage={**lineage,
+                                           "model_fingerprint": "bbbb"})
+    assert _tree(out, ck) == before
+
+
+def test_progress_read_is_strict(spark, tmp_path):
+    """_progress is read as the files record_done renames into place: a
+    crash's leftover .tmp is ignored, an unreadable row raises naming its
+    file, and a row from before n_buckets was recorded refuses a resume."""
+    import json
+
+    from languagedetection_spark.sources.checkpoint import (
+        load_completed, record_done, run_with_checkpoint,
+    )
+
+    ck = str(tmp_path / "ck")
+    record_done(ck, "s1", 0, {"n_rows": 3, "n_buckets": 2})
+    prog = os.path.join(ck, "_progress")
+    with open(os.path.join(prog, "s1-1.json.tmp"), "w") as f:
+        f.write('{"run_id": "s1", "bucket": 1, "sta')
+    assert set(load_completed(ck, "s1")) == {0}
+
+    bad = os.path.join(prog, "s1-1.json")
+    with open(bad, "w") as f:
+        f.write('{"run_id": "s1", "bucket": 1, "sta')
+    with pytest.raises(ValueError, match="s1-1.json"):
+        load_completed(ck, "s1")
+
+    with open(os.path.join(prog, "old-0.json"), "w") as f:
+        f.write(json.dumps({"run_id": "old", "bucket": 0,
+                            "status": "done"}) + "\n")
+    df = spark.createDataFrame([("c1", "some text")],
+                               "conv_id string, text string")
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_with_checkpoint(spark, df, _length_flag, str(tmp_path / "out"),
+                            ck, "old", n_buckets=2)
+    assert not os.path.exists(tmp_path / "out")
 
 
 # ---------------------------------------------------------------------------
@@ -547,7 +691,7 @@ def test_filter_job_dedup_exact_stage(spark, tmp_path):
     assert prog and sum(r["n_rows"] for r in prog) == 6
     for r in prog:
         assert {"mean_lang_conf", "n_no_lang", "drop_reasons",
-                "model_fingerprint"} <= set(r)
+                "model_fingerprint", "input_path", "n_buckets"} <= set(r)
         assert r["n_kept"] <= r["n_rows"]
         assert sum(r["drop_reasons"].values()) == r["n_rows"] - r["n_kept"]
     # rerun on the SAME --output with FEWER buckets: run 1's bucket=2,3
@@ -560,10 +704,17 @@ def test_filter_job_dedup_exact_stage(spark, tmp_path):
          "--checkpoint", str(tmp_path / "ckpt"), "--dedup", "exact",
          "--buckets", "2", "--run-id", "r2",
          "--bucketed-table", "kept_compacted2",
+         "--conv-report", str(tmp_path / "report"),
          "--warehouse-dir", str(tmp_path / "wh")],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=ROOT,
     )
     assert out2.returncode == 0, out2.stderr[-2000:]
+    # the report's row count comes from its write pass: one row per conv
+    # left after dedup (c2's only turn is a copy of c1's)
+    job_out2 = json.loads(out2.stdout.strip().splitlines()[-1])
+    assert job_out2["conv_report_rows"] == duckdb.execute(
+        f"SELECT count(*) FROM '{tmp_path}/report/*.parquet'"
+    ).fetchone()[0] == 4
     n_all, n_distinct = duckdb.execute(
         f"SELECT count(*), count(DISTINCT conv_id || '|' || turn_idx) "
         f"FROM '{tmp_path}/wh/kept_compacted2/*.parquet'"
@@ -573,6 +724,22 @@ def test_filter_job_dedup_exact_stage(spark, tmp_path):
         f"SELECT count(*) FROM '{tmp_path}/wh/kept_compacted/*.parquet'"
     ).fetchone()[0]
     assert n_all == n_run1 > 0  # same input + model => same NON-EMPTY kept set
+    # a bucket dir that _progress marks done but that is gone fails the
+    # rerun before any export, instead of exporting the other buckets
+    import shutil
+    shutil.rmtree(tmp_path / "out" / "bucket=1")
+    out3 = subprocess.run(
+        [sys.executable, "-m", "languagedetection_spark.jobs.filter_job",
+         "--input", inp, "--output", str(tmp_path / "out"),
+         "--checkpoint", str(tmp_path / "ckpt"), "--dedup", "exact",
+         "--buckets", "2", "--run-id", "r2",
+         "--bucketed-table", "kept_compacted3",
+         "--warehouse-dir", str(tmp_path / "wh")],
+        capture_output=True, text=True, cwd=ROOT,
+    )
+    assert out3.returncode != 0
+    assert "bucket=1" in out3.stderr
+    assert not (tmp_path / "wh" / "kept_compacted3").exists()
 
 
 def test_filter_job_rejects_dedup_with_streaming(tmp_path):
